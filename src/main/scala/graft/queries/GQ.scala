@@ -21,9 +21,18 @@ trait QueryBatch {
   * between queries, Verify at startup) can wipe exactly this tree.
   * Previously each batch had its own copy of the literal — moving the
   * root meant editing them all, and a missed copy silently escaped the
-  * cleanup. */
+  * cleanup.
+  *
+  * The root is the `graft.scratch.root` JVM property, else `target/qtmp`
+  * under the working directory — so a copy of the repo, or a second
+  * harness given its own `-Dgraft.scratch.root`, never wipes another
+  * process's tables. */
 object Scratch {
-  val Root = "/root/repo/target/qtmp"
+  val Root: String = resolveRoot(sys.props.get("graft.scratch.root"))
+
+  private[queries] def resolveRoot(prop: Option[String]): String =
+    java.nio.file.Paths.get(prop.filter(_.trim.nonEmpty).getOrElse("target/qtmp"))
+      .toAbsolutePath.normalize.toString
 
   /** Fresh per-call dir path (not created; writers create as needed). */
   def dir(tag: String): String = {

@@ -9,6 +9,7 @@ import scala.util.control.NonFatal
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.LogFileIndex
 import org.apache.spark.sql.types.{StructType, LongType, StringType, TimestampType, IntegerType}
 
 /** One commit in a table's log. Mirrors the metadata surface the reference
@@ -45,9 +46,12 @@ final case class Commit(
   *   <path>/_changes/v42/part-*.parquet       // optional change feed
   * }}}
   *
-  * Scale design: the log stores *file lists*, so a snapshot read is
-  * `spark.read.parquet(files: _*)` — pruning/pushdown work unchanged, and
-  * DML rewrites only the files that contain matched rows (see MergeOps).
+  * Scale design: the log stores *file lists*, so a snapshot read is a
+  * Parquet scan built straight from the log's live files
+  * ([[org.apache.spark.sql.graftbridge.LogFileIndex]]: one driver-side
+  * `getFileStatus` per file, no listing or schema-inference job) —
+  * pruning/pushdown work unchanged, and DML rewrites only the files that
+  * contain matched rows (see MergeOps).
   * Commits are atomic single-file renames; concurrent writers race on the
   * version filename and the loser retries (`Concurrency.retry`), matching
   * the reference's retry-merge helper (`HF/deltahelpers.py:132-172`).
@@ -176,8 +180,10 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     * commit dirs (CONFLICTING_DIRECTORY_STRUCTURES) and would resolve the
     * columns to null under a raw `spark.read.parquet(files)`. Every
     * internal reader (DML rewrites, CDF re-reads, streams) goes through
-    * here; recursiveFileLookup disables inference on the `__part_k=v`
-    * segments. */
+    * here. The scan is built from the given file list by `LogFileIndex`,
+    * which has no partition schema (the `__part_k=v` segments are never
+    * inferred) and launches no Spark job: `spark.read.parquet` would list
+    * more than 32 paths with a job of one task per file. */
   private[graft] def readFiles(files: Seq[String], readSchema: StructType = null): DataFrame =
     readFilesWithPos(files, readSchema).drop(DvFileCol, DvPosCol)
 
@@ -224,8 +230,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
       if (parts.isEmpty) (Nil, files) else files.partition(legacyKeyIdx(_) >= 0)
     val modernDf: Option[DataFrame] =
       if (modern.isEmpty) None
-      else Some(withPos(
-        spark.read.schema(s).option("recursiveFileLookup", "true").parquet(modern: _*)))
+      else Some(withPos(LogFileIndex.scan(spark, modern, s)))
     val legacyDfs: Seq[DataFrame] = legacy.groupBy { abs =>
       // same normalization as legacyKeyIdx — the index is positional
       val p = Paths.get(abs).toAbsolutePath.normalize
@@ -237,8 +242,14 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     val df = (modernDf.toSeq ++ legacyDfs).reduce(_ unionByName _)
     val dv = dvAt(dvVersion)
     if (dv.isEmpty) df
-    else df.join(spark.read.parquet(dv: _*), Seq(DvFileCol, DvPosCol), "left_anti")
+    else df.join(readDv(dv), Seq(DvFileCol, DvPosCol), "left_anti")
   }
+
+  /** Deletion-vector sidecar rows — (__dv_file, __dv_pos) — of `dvFiles`,
+    * scanned from the log's file list with their fixed schema (no
+    * listing or footer-inference job). */
+  private[tables] def readDv(dvFiles: Seq[String]): DataFrame =
+    LogFileIndex.scan(spark, dvFiles, DvSchema)
 
   /** Snapshot read (optionally `VERSION AS OF`). */
   def read(versionAsOf: Long = Long.MaxValue): DataFrame =
@@ -769,6 +780,7 @@ object GraftTable {
   /** Column names for deletion-vector provenance (file URI + row index). */
   private[graft] val DvFileCol = "__dv_file"
   private[graft] val DvPosCol = "__dv_pos"
+  private val DvSchema = new StructType().add(DvFileCol, StringType).add(DvPosCol, LongType)
 
   /** Loan-pattern directory listing/walk — the returned streams hold an
     * open directory FD until closed, which leaks under the idiomatic

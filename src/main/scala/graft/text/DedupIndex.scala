@@ -43,9 +43,12 @@ object DedupIndex {
       // without this, every input split writes a file into every band
       // directory (splits × bands tiny files), and a one-split input
       // serializes the whole shingle+write on one core. One shuffle of
-      // 12-byte rows buys exactly numBands well-sized files and
-      // numBands-way write parallelism.
-      .repartition(numBands, col("__band"))
+      // 12-byte rows into min(numBands, cores) tasks hashes each band to
+      // exactly one task, so the write still leaves one file per band
+      // and runs no more tasks than cores — a task per band would make
+      // a small ingest batch pay a task launch and deserialize per band.
+      .repartition(math.min(numBands, docs.sparkSession.sparkContext.defaultParallelism),
+        col("__band"))
 
   /** Shingle the corpus once and persist its postings. */
   def build(docs: DataFrame, path: String, n: Int, numBands: Int = 32,

@@ -115,4 +115,39 @@ class GraftTableSpec extends SparkTestBase {
     t.syncIdentity()
     assert(t.identityHighWatermark === 50L)
   }
+
+  test("snapshot reads are built from the log's file list without a Spark job") {
+    // above 32 paths spark.read.parquet lists the files with a job of one
+    // task per file; a read built from the log needs no job until an action
+    val t = GraftTable.create(spark, scratch("logscan"), customer.schema,
+      Map("graft.deletionVectors" -> "true"))
+    t.append(customer.repartition(40))
+    MergeOps.delete(t, "c_custkey % 7 = 0") // live DV sidecar on every read
+    val files = t.filesAt()
+    assert(files.size > 32, s"need more than 32 live files, got ${files.size}")
+    val (activity, (full, where, withPos)) = graft.SparkActivity.during(spark) {
+      (t.read(), t.readWhere("c_custkey < 100"), t.readFilesWithPos(files))
+    }
+    assert(activity.jobs === 0, "building a read must launch no job before an action")
+
+    def local(uri: String) = java.nio.file.Paths.get(new java.net.URI(uri)).toString
+    assert(full.inputFiles.map(local).toSet ===
+      (files ++ t.dvAt()).toSet, "the scan reads exactly the log's live files")
+    val expect = customer.filter(col("c_custkey") % 7 =!= 0)
+    assert(full.count() === expect.count())
+    assert(where.count() === expect.filter(col("c_custkey") < 100).count())
+    // _metadata.file_path URIs still name the log's files (MergeOps and
+    // the DV delete path parse them back to paths)
+    assert(withPos.select(GraftTable.DvFileCol).distinct().collect()
+      .map(r => local(r.getString(0))).toSet.subsetOf(files.toSet))
+
+    // two reads of one snapshot are the same plan (exchange reuse,
+    // CacheManager matching); a different file set is not
+    val a = t.read().queryExecution.analyzed
+    assert(a.sameResult(t.read().queryExecution.analyzed))
+    assert(t.readFiles(files).queryExecution.analyzed
+      .sameResult(t.readFiles(files.reverse).queryExecution.analyzed))
+    assert(!t.readFiles(files).queryExecution.analyzed
+      .sameResult(t.readFiles(files.tail).queryExecution.analyzed))
+  }
 }

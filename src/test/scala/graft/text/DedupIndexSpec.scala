@@ -116,6 +116,25 @@ class DedupIndexSpec extends SparkTestBase {
     assert(reprobe.nonEmpty)
   }
 
+  test("append writes one file per non-empty band from at most one task per core") {
+    val path = scratch("dedupidx7")
+    val t = DedupIndex.build(d.filter(col("doc_id") < 100), path, n = 5, numBands = 32)
+    val before = t.filesAt().toSet
+    val batch = batchOf(7, 900000, " fanout tail")
+    val (activity, _) = graft.SparkActivity.during(spark)(DedupIndex.append(t, batch))
+    val cores = spark.sparkContext.defaultParallelism
+    assert(activity.stageTasks.nonEmpty && activity.stageTasks.max <= cores,
+      s"no append stage may run more tasks than the $cores cores: ${activity.stageTasks}")
+    val added = (t.filesAt().toSet -- before).toSeq
+    val perBand = added.groupBy(f =>
+      "__part___band=(\\d+)".r.findFirstMatchIn(f).map(_.group(1)).getOrElse("?"))
+    val bands = t.read().filter(col("doc_id") >= 900000).select("__band").distinct()
+      .as[Int].collect().map(_.toString).toSet
+    assert(bands.size > cores, s"the batch must span more bands than cores: $bands")
+    assert(perBand.keySet === bands, s"new files per band dir: ${perBand.keySet}")
+    assert(perBand.values.forall(_.size == 1), s"exactly one new file per band: $perBand")
+  }
+
   test("a non-index table is rejected with a clear error") {
     val path = scratch("dedupidx4")
     GraftTable.createFrom(spark, path, d.limit(5))
